@@ -67,8 +67,7 @@ object DecodeJob {
   ): Dataset[Page] = {
     EncodeJob.requireNoPendingSwap(spark, outDir)
     // a fully-deleted table has a chunks dir with no data files: that is
-    // an empty table, not an error (scanning it would fail schema
-    // inference)
+    // an empty table, not an error, and needs no scan
     if (!EncodeJob.hasCommittedChunks(spark, outDir))
       return spark.emptyDataset(org.apache.spark.sql.Encoders.product[Page])
     decodeChunksWhereUnchecked(spark, outDir, chunkPred)
@@ -86,7 +85,7 @@ object DecodeJob {
       chunkPred: Column
   ): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(EncodeJob.chunksPath(outDir))
+    EncodeJob.chunkScan(spark, outDir)
       .filter(chunkPred)
       .as[EncodedChunk]
       .mapPartitions(_.flatMap(decodeRowBytes))
@@ -116,12 +115,6 @@ object DecodeJob {
     */
   private val LookupUrlsPerScan = 48
 
-  // test/probe seam: LookupAb A/Bs the batched shape against the former
-  // single-scan form (which trips the 64 KB codegen fallback) on one table
-  private[graft] var lookupUrlsPerScanForTest: Option[Int] = None
-  private def lookupUrlsPerScan: Int =
-    lookupUrlsPerScanForTest.getOrElse(LookupUrlsPerScan)
-
   /** Point lookup: the pages for exactly these urls (absent urls simply
     * yield no row). Two-level pruning:
     *  - part_id is a pure function of (url, stored EncodeMeta), so each
@@ -133,9 +126,15 @@ object DecodeJob {
     * size. Intended for point reads (one range test per url); for url SETS
     * at corpus scale use [[decodeUrlRange]] per host/prefix slice or a
     * join against the decoded url column.
+    *
+    * A point read is ONE Spark job, the payload scan: the chunk scan reads
+    * through the fixed [[EncodeJob.chunkScan]] schema (no inference job),
+    * the home partitions are constant-folded into the scan's partition
+    * filter, and [[EncodeJob.readMeta]] answers from its memo without a job
+    * while `_meta` is unchanged (only the first read after a `_meta`
+    * rewrite pays one job to decode it).
     */
   def lookupUrls(spark: SparkSession, outDir: String, urls: Seq[String]): Dataset[Page] = {
-    import spark.implicits._
     require(urls.size <= MaxLookupUrls,
       s"lookupUrls is a point-read API (got ${urls.size} urls, max $MaxLookupUrls): " +
         "for url sets use decodeUrlRange/decodeUrlPrefix per host/prefix slice, " +
@@ -143,14 +142,11 @@ object DecodeJob {
     if (urls.isEmpty) return spark.emptyDataset(
       org.apache.spark.sql.Encoders.product[Page])
     // home partition per url, via the exact partIdCol expression the
-    // encoder used (config recovered from the stored _meta table)
-    val pidByUrl: Map[String, Int] = EncodeJob.readMeta(spark, outDir) match {
-      case Some(m) =>
-        val cfg = EncodeConfig(numPartitions = m.numPartitions, saltFactor = m.saltFactor)
-        urls.toDF("url").withColumn("part_id", EncodeJob.partIdCol(cfg))
-          .as[(String, Int)].collect().toMap
-      case None => Map.empty // pre-meta table: range-only pruning
-    }
+    // encoder used (config recovered from the stored _meta table) over the
+    // url literal: Catalyst folds it to a part_id literal, which prunes the
+    // scan to the home directories. A pre-meta table gets range-only pruning.
+    val homeCfg = EncodeJob.readMeta(spark, outDir).map(m =>
+      EncodeConfig(numPartitions = m.numPartitions, saltFactor = m.saltFactor))
     // table-level gates once, not once per batch scan
     EncodeJob.requireNoPendingSwap(spark, outDir)
     if (!EncodeJob.hasCommittedChunks(spark, outDir))
@@ -158,13 +154,10 @@ object DecodeJob {
     // each batch filters by ITS OWN url subset: a chunk whose range covers
     // urls from two batches is decoded by both scans, and a shared
     // full-set filter would then emit those pages twice
-    urls.distinct.grouped(lookupUrlsPerScan).map { batch =>
+    urls.distinct.grouped(LookupUrlsPerScan).map { batch =>
       val pred = batch.map { u =>
         val range = col("url_min") <= u && col("url_max") >= u
-        pidByUrl.get(u) match {
-          case Some(pid) => col("part_id") === pid && range
-          case None => range
-        }
+        homeCfg.fold(range)(cfg => col("part_id") === EncodeJob.partIdCol(cfg, lit(u)) && range)
       }.reduce(_ || _)
       val batchSet = batch.toSet
       decodeChunksWhereUnchecked(spark, outDir, pred).filter(p => batchSet.contains(p.url))
@@ -239,7 +232,7 @@ object DecodeJob {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(outCols.map { case (_, n) => StructField(n, BinaryType) }))
     }
-    spark.read.parquet(EncodeJob.chunksPath(outDir))
+    EncodeJob.chunkScan(spark, outDir)
       .select(outCols.map { case (src, n) => col(src).as(n) }: _*)
   }
 
@@ -279,7 +272,7 @@ object DecodeJob {
     EncodeJob.requireNoPendingSwap(spark, outDir)
     if (!EncodeJob.hasCommittedChunks(spark, outDir))
       return spark.emptyDataset[(Int, Int, Int, Array[Byte])]
-    spark.read.parquet(EncodeJob.chunksPath(outDir))
+    EncodeJob.chunkScan(spark, outDir)
       .select($"part_id", $"chunk_id", col(s"$colName.payload").as("payload"))
       .as[(Int, Int, Array[Byte])]
       .flatMap { case (pid, cid, payload) =>

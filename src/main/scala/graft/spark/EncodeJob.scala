@@ -1,7 +1,9 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.codec.ColumnCodec
@@ -121,10 +123,12 @@ final case class EncodeConfig(
   */
 object EncodeJob {
 
-  /** Deterministic salted partition id column for a pages dataset. */
-  def partIdCol(cfg: EncodeConfig) = {
-    val host = regexp_extract(col("url"), "https?://([^/]+)/", 1)
-    val salt = pmod(xxhash64(col("url")), lit(cfg.saltFactor))
+  /** Deterministic salted partition id column for a pages dataset (of
+    * `url`: given a literal, Catalyst folds it to the url's home part id).
+    */
+  def partIdCol(cfg: EncodeConfig, url: org.apache.spark.sql.Column = col("url")) = {
+    val host = regexp_extract(url, "https?://([^/]+)/", 1)
+    val salt = pmod(xxhash64(url), lit(cfg.saltFactor))
     pmod(xxhash64(host, salt), lit(cfg.numPartitions)).cast("int")
   }
 
@@ -145,15 +149,50 @@ object EncodeJob {
       .write.mode(SaveMode.Overwrite).parquet(metaPath(outDir))
   }
 
+  /** Read schemas of the chunks and lineage tables: scans through them
+    * skip parquet schema inference, a Spark job of its own before every
+    * scan. `part_id` stays the chunks' partition column, typed from the
+    * `part_id=<n>` directory names; the leaf schema reads one partition dir.
+    */
+  private val chunkSchema = Encoders.product[EncodedChunk].schema
+  private val chunkLeafSchema = StructType(chunkSchema.filterNot(_.name == "part_id"))
+  private val lineageSchema = Encoders.product[LineageRecord].schema
+
+  /** The chunks table through the fixed schema: every chunk scan starts here. */
+  def chunkScan(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(chunkSchema).parquet(chunksPath(outDir))
+
+  // qualified _meta path -> ((path, length, mtime) of its committed files,
+  // the meta read from them): one entry per table, replaced on change
+  private val metaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], EncodeMeta)]()
+
+  /** The stored layout, or None without a committed `_meta` file. Every
+    * call lists the committed `_meta` files and, while they are unchanged,
+    * answers from a memo without a Spark job; a miss reads them through
+    * the fixed schema in one job. The memo key is sound because `_meta` is
+    * never modified in place: [[writeMeta]] overwrites the directory and
+    * each Spark write names its file `part-…-<job uuid>…`, so a rewritten
+    * or re-laid-out table always presents a new file name.
+    */
   def readMeta(spark: SparkSession, outDir: String): Option[EncodeMeta] = {
-    import spark.implicits._
     // gate on a COMMITTED data file, not directory existence: writeMeta's
     // SaveMode.Overwrite deletes-then-rewrites _meta on every run, so a
     // crash in that window leaves an existing-but-empty dir — treating it
     // as a table would wedge every later run/append/lookup on an
     // unreadable parquet path, when the right reading is "absent, rewrite"
-    if (!hasCommittedFileUnder(spark, metaPath(outDir))) None
-    else Some(spark.read.parquet(metaPath(outDir)).as[EncodeMeta].head())
+    val dir = new Path(metaPath(outDir))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = committedFiles(fs, dir)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    if (files.isEmpty) return None
+    val key = fs.makeQualified(dir).toString
+    Option(metaMemo.get(key)).collect { case (`files`, m) => m }.orElse {
+      val enc = Encoders.product[EncodeMeta]
+      val m = spark.read.schema(enc.schema).parquet(metaPath(outDir)).as(enc).head()
+      metaMemo.put(key, (files, m))
+      Some(m)
+    }
   }
 
   /** A later write to an existing table must use the same partitioning
@@ -179,18 +218,23 @@ object EncodeJob {
     hasCommittedFileUnder(spark, chunksPath(outDir))
 
   private def hasCommittedFileUnder(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val path = f.getPath.toString
-      val name = f.getPath.getName
-      if (!path.contains("_temporary") && !path.contains(".spark-staging") &&
-          !name.startsWith("_") && !name.startsWith(".")) return true
+    val p = new Path(dir)
+    committedFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).hasNext
+  }
+
+  /** The committed data files under `dir`, lazily listed (staging junk
+    * under _temporary / .spark-staging and marker files do not count) by
+    * `listStatus`: `listFiles` loads each file's permissions, which the
+    * local FS does by forking a process per file.
+    */
+  private def committedFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
+    def walk(d: Path): Iterator[FileStatus] =
+      fs.listStatus(d).iterator.flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator.single(s))
+    (if (fs.exists(dir)) walk(dir) else Iterator.empty).filter { f =>
+      val (path, name) = (f.getPath.toString, f.getPath.getName)
+      !path.contains("_temporary") && !path.contains(".spark-staging") &&
+        !name.startsWith("_") && !name.startsWith(".")
     }
-    false
   }
 
   // ---------------------------------------------------------- writer lease
@@ -518,7 +562,7 @@ object EncodeJob {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Set.empty
     else
-      spark.read.parquet(lineagePath(outDir))
+      spark.read.schema(lineageSchema).parquet(lineagePath(outDir))
         .filter($"status" === "done")
         .select("part_id").distinct().as[Int].collect().toSet
   }
@@ -815,7 +859,7 @@ object EncodeJob {
           .select($"url".as("d_url"), lit(null).cast("int").as("d_part")), None)
     }
     val urlChunks = {
-      val scan = spark.read.parquet(chunksPath(outDir))
+      val scan = chunkScan(spark, outDir)
       homePids.fold(scan)(ps => scan.filter($"part_id".isin(ps: _*)))
     }.select($"part_id", $"url_min", $"url_max", $"url.payload".as("payload"))
     // meta known -> every target has its home pid, so part_id is a plain
@@ -1078,9 +1122,6 @@ object EncodeJob {
     import spark.implicits._
     require(selected.nonEmpty, "compactedChunkStream needs at least one partition")
     val fs = chunksFs(spark, outDir)
-    val leafSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.Encoders.product[EncodedChunk].schema
-        .filterNot(_.name == "part_id"))
     // balanced union tree: a left-deep reduce would recurse O(selected)
     // deep through analysis (stack risk at corpus-scale partition counts);
     // the per-branch driver listing cost stays O(selected) — which is why
@@ -1093,7 +1134,7 @@ object EncodeJob {
         case Seq(a) => a
       }.toSeq)
     val chunkRowsDf = balancedUnion(selected.map { pid =>
-      val live = spark.read.schema(leafSchema)
+      val live = spark.read.schema(chunkLeafSchema)
         .parquet(s"${chunksPath(outDir)}/part_id=$pid")
       // an upsert's delta chunks join the SAME single-task branch as the
       // partition's stored chunks (a separate branch would emit the same
@@ -1101,7 +1142,7 @@ object EncodeJob {
       val withDelta = deltaDir
         .map(d => new org.apache.hadoop.fs.Path(d, s"part_id=$pid"))
         .filter(fs.exists)
-        .map(p => live.unionByName(spark.read.schema(leafSchema).parquet(p.toString)))
+        .map(p => live.unionByName(spark.read.schema(chunkLeafSchema).parquet(p.toString)))
         .getOrElse(live)
       withDelta.withColumn("part_id", lit(pid)).coalesce(1)
     })
@@ -1112,16 +1153,20 @@ object EncodeJob {
     // capture: a delete-batch-sized set (<= MaxDeleteUrls = 100k urls)
     // closure-captured here inflates the TASK BINARY to tens of MB, which
     // the scheduler re-broadcasts on every stage (re)submission and warns
-    // about; a broadcast variable ships once per executor and is reused
-    val bcDrop = spark.sparkContext.broadcast(dropUrls)
-    val hasDrop = dropUrls.nonEmpty // driver-side fact, avoids .value.isEmpty per chunk
+    // about; a broadcast variable ships once per executor and is reused.
+    // As UTF-8 bytes sorted in unsigned order, probed by binary search on
+    // the decoded url bytes: no String per decoded row.
+    val bcDrop = spark.sparkContext.broadcast(
+      dropUrls.toArray.map(_.getBytes(UTF_8)).sortWith(java.util.Arrays.compareUnsigned(_, _) < 0))
     val pre = chunkRowsDf.as[EncodedChunk].mapPartitions { it =>
+      val drop = bcDrop.value
+      val byUnsignedBytes: java.util.Comparator[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
       it.flatMap { c =>
         val rows = compactPreRows(c, bias, forceReencode)
         // delta chunks carry the REPLACEMENT rows of the very urls being
         // dropped from the stored generation — never filter those
-        if (!hasDrop || c.chunk_id >= UpsertDeltaChunkBase) rows
-        else rows.filterNot(r => bcDrop.value.contains(new String(r._1, UTF_8)))
+        if (drop.isEmpty || c.chunk_id >= UpsertDeltaChunkBase) rows
+        else rows.filterNot(r => java.util.Arrays.binarySearch(drop, r._1, byUnsignedBytes) >= 0)
       }
     }
     pre.toDF()
@@ -1141,7 +1186,7 @@ object EncodeJob {
   private def partChunkStats(
       spark: SparkSession, outDir: String): Array[(Int, Long, Long)] = {
     import spark.implicits._
-    spark.read.parquet(chunksPath(outDir))
+    chunkScan(spark, outDir)
       .groupBy($"part_id")
       .agg(count(lit(1)).as("n_chunks"), sum($"n_rows").as("n_rows"))
       .as[(Int, Long, Long)].collect()
@@ -1349,15 +1394,14 @@ object EncodeJob {
       parts: Seq[Int]
   ): Seq[LineageRecord] = {
     import spark.implicits._
-    // a delete can have emptied EVERY partition: scanning a data-file-less
-    // chunks dir would throw (schema inference) with the _SWAP marker
-    // still pending — i.e. a permanently wedged table
+    // a delete can have emptied EVERY partition: nothing to aggregate,
+    // so no scan
     if (!hasCommittedChunks(spark, outDir)) return Seq.empty
     val cols = Seq("url", "warc_ts", "html", "text", "lang")
     // ONE aggregation job: the five per-column codec strings travel as an
     // array column and are merged by collect_set-of-arrays (flattened
     // driver-side) — a separate exploded pass would scan the metadata twice
-    val sums = spark.read.parquet(chunksPath(outDir))
+    val sums = chunkScan(spark, outDir)
       .filter($"part_id".isin(parts: _*))
       .select(
         $"part_id", $"n_rows",
@@ -1400,7 +1444,7 @@ object EncodeJob {
     }
     val kept =
       if (!lfs.exists(lp)) Seq.empty
-      else spark.read.parquet(lineagePath(outDir)).as[LineageRecord]
+      else spark.read.schema(lineageSchema).parquet(lineagePath(outDir)).as[LineageRecord]
         .collect().toSeq.filterNot(r => parts.contains(r.part_id))
     // fold superseded per-append rows while the table is being rewritten
     // anyway: append (batch and per-micro-batch streaming) APPENDS one row
@@ -1511,8 +1555,11 @@ object EncodeJob {
       // cast("binary") of a parquet string column is exactly its UTF-8
       // bytes, so the kernel input (and every payload byte) is unchanged.
       val bias = cfg.bwtBias
+      // a null warc_ts fails here with a named error; the Long tuple slot
+      // below would otherwise fail in the encoder's null check
       val pre = todo
-        .select(col("url").cast("binary"), unix_micros(col("warc_ts")),
+        .select(col("url").cast("binary"),
+          coalesce(unix_micros(col("warc_ts")), raise_error(lit(NullWarcTsError))),
           col("html"), col("text").cast("binary"), col("lang").cast("binary"),
           col("part_id"))
         .as[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)]
@@ -1610,7 +1657,7 @@ object EncodeJob {
     val newRows = if (!hasChunks) withPart.toDF()
       .select("url", "warc_ts", "html", "text", "lang", "part_id")
     else {
-      val urlChunks = spark.read.parquet(chunksPath(outDir))
+      val urlChunks = chunkScan(spark, outDir)
         .select($"part_id", $"chunk_id", $"url_min", $"url_max", $"url.payload".as("payload"))
       val deltaKeys = withPart.select($"url".as("d_url"), $"part_id".as("d_part"))
       val candidateChunks = urlChunks.join(deltaKeys,
@@ -1632,7 +1679,7 @@ object EncodeJob {
     // offset would reuse an orphaned chunk's (part_id, chunk_id) key
     val offsets: Map[Int, Int] =
       if (!hasChunks) Map.empty
-      else spark.read.parquet(chunksPath(outDir))
+      else chunkScan(spark, outDir)
         .groupBy($"part_id").agg(max($"chunk_id").as("m"))
         .as[(Int, Int)].collect().map { case (pid, m) => pid -> (m + 1) }.toMap
     val bcOff = spark.sparkContext.broadcast(offsets)
@@ -1688,6 +1735,10 @@ object EncodeJob {
     buf.writeBytes(enc)
     buf.toArray
   }
+
+  // url and warc_ts are a page's identity: a null one fails the encode by name
+  private[spark] val NullUrlError = "graft: null url in the input pages (url must be non-null)"
+  private[spark] val NullWarcTsError = "graft: null warc_ts in the input pages (warc_ts must be non-null)"
 
   // (url utf-8 bytes, warc_ts epoch micros, html pre-encoded, text
   // pre-encoded, lang utf-8 bytes) — raw bytes end to end; Strings exist
@@ -1765,7 +1816,7 @@ object EncodeJob {
       bwtBias: Double
   ): EncodedChunk = {
     val urls = chunk.map { r =>
-      require(r._1 != null, "null url/warc_ts")
+      require(r._1 != null, NullUrlError)
       r._1
     }.toArray
     val tss = chunk.map(_._2).toArray

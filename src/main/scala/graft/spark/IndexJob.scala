@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.codec.FmIndex
@@ -55,7 +55,9 @@ object IndexJob {
   ): Dataset[SearchHit] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(patterns.map(p => (p, p.getBytes(UTF_8))))
-    spark.read.parquet(indexDir).as[IndexRow].mapPartitions { it =>
+    // read through the known row schema: no schema-inference job per search
+    val rows = spark.read.schema(Encoders.product[IndexRow].schema).parquet(indexDir).as[IndexRow]
+    rows.mapPartitions { it =>
       val pats = bc.value
       it.flatMap { row =>
         val fm = FmIndex.deserialize(row.index)

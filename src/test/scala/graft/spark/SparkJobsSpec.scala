@@ -1253,4 +1253,166 @@ class SparkJobsSpec extends AnyFunSuite {
     val expected = pages.collect().map(_.lang).sorted
     assert(langs.toSeq == expected.toSeq)
   }
+
+  /** Spark jobs started by `body` on this thread. Jobs are tagged through a
+    * thread-local property, and marker jobs before and after `body` drain
+    * the asynchronous listener bus: every start event of `body`'s jobs is
+    * delivered before the closing marker's.
+    */
+  private def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.jobs")))
+          .filter(_.startsWith(tag)).foreach(seen.put)
+    }
+    def marker(name: String): Unit = {
+      sc.setLocalProperty("graft.test.jobs", s"$tag:$name")
+      sc.parallelize(Seq(1), 1).count()
+    }
+    def awaitMarker(name: String): Int = {
+      var n = 0
+      var e = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (e != s"$tag:$name") {
+        assert(e != null, "listener bus did not deliver the marker job")
+        n += 1
+        e = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin")
+      awaitMarker("begin")
+      sc.setLocalProperty("graft.test.jobs", s"$tag:body")
+      body
+      marker("end")
+      awaitMarker("end")
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a point read is one Spark job; an unchanged _meta is read with none") {
+    import spark.implicits._
+    val out = tmpDir("one_job_lookup")
+    val pages = PagesGen.generate(spark, 120, partitions = 2).collect()
+    EncodeJob.run(spark, spark.createDataset(pages.toIndexedSeq), out,
+      EncodeConfig(numPartitions = 4, chunkRows = 16))
+    val meta = EncodeJob.readMeta(spark, out)
+    assert(meta.contains(EncodeJob.EncodeMeta(4, 16, 16)))
+    var again: Option[EncodeJob.EncodeMeta] = None
+    assert(jobsRunBy { again = EncodeJob.readMeta(spark, out) } == 0,
+      "a second readMeta of an unchanged table must not run a Spark job")
+    assert(again == meta)
+    var got: Array[Page] = Array.empty
+    val jobs = jobsRunBy { got = DecodeJob.lookupUrls(spark, out, Seq(pages(17).url)).collect() }
+    assert(jobs == 1, s"a point read must be the payload scan alone, ran $jobs jobs")
+    assert(got.map(_.url).toSeq == Seq(pages(17).url) && got.head.text == pages(17).text)
+  }
+
+  test("a table rewritten with a new layout misses the _meta memo; lookups follow it") {
+    import spark.implicits._
+    val out = tmpDir("meta_relayout")
+    val pages = PagesGen.generate(spark, 60, partitions = 2).collect()
+    val urls = pages.map(_.url).toSeq
+    EncodeJob.run(spark, spark.createDataset(pages.toIndexedSeq), out,
+      EncodeConfig(numPartitions = 2, chunkRows = 8))
+    assert(EncodeJob.readMeta(spark, out).map(_.numPartitions).contains(2))
+    assert(DecodeJob.lookupUrls(spark, out, urls).count() == urls.size)
+    // same directory, new layout: run refuses a layout change on a live
+    // table, so the table is removed and written again
+    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(out), true)
+    EncodeJob.run(spark, spark.createDataset(pages.toIndexedSeq), out,
+      EncodeConfig(numPartitions = 5, saltFactor = 3, chunkRows = 8))
+    assert(EncodeJob.readMeta(spark, out).contains(EncodeJob.EncodeMeta(5, 3, 8)))
+    val found = DecodeJob.lookupUrls(spark, out, urls).collect().map(_.url).sorted.toSeq
+    assert(found == urls.sorted)
+  }
+
+  test("the fixed chunk read schema equals the inferred schema after every write op") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    def noNulls(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f => f.copy(dataType = noNulls(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(noNulls(a.elementType), containsNull = true)
+      case m: MapType => MapType(noNulls(m.keyType), noNulls(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val out = tmpDir("schema_parity")
+    val cfg = EncodeConfig(numPartitions = 3, chunkRows = 8)
+    val all = PagesGen.generate(spark, 90, partitions = 2).collect()
+    def assertParity(op: String): Unit = {
+      val inferred = noNulls(spark.read.parquet(EncodeJob.chunksPath(out)).schema)
+      val fixed = noNulls(EncodeJob.chunkScan(spark, out).schema)
+      assert(inferred == fixed, s"after $op: inferred ${inferred.simpleString} fixed ${fixed.simpleString}")
+    }
+    EncodeJob.run(spark, spark.createDataset(all.take(60).toIndexedSeq), out, cfg)
+    assertParity("run")
+    EncodeJob.append(spark, spark.createDataset(all.drop(60).toIndexedSeq), out, cfg)
+    assertParity("append")
+    EncodeJob.upsert(spark, spark.createDataset(all.take(5).map(_.copy(text = "fresh")).toIndexedSeq), out, cfg)
+    assertParity("upsert")
+    EncodeJob.delete(spark, out, all.slice(10, 20).map(_.url).toSeq, cfg)
+    assertParity("delete")
+    EncodeJob.compact(spark, out, cfg)
+    assertParity("compact")
+    assert(DecodeJob.run(spark, out).count() == 80)
+  }
+
+  test("a null url or warc_ts fails the encode with a graft error naming the column") {
+    import spark.implicits._
+    val base = PagesGen.generate(spark, 20, partitions = 2).collect()
+    def failure(bad: Page): String = {
+      val ds = spark.createDataset((base.toSeq :+ bad).toIndexedSeq)
+      val ex = intercept[Throwable](
+        EncodeJob.run(spark, ds, tmpDir("null_id"), EncodeConfig(numPartitions = 2, chunkRows = 8)))
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    }
+    val noTs = failure(base.head.copy(url = "https://x.example/no-ts", warc_ts = null))
+    assert(noTs.contains(EncodeJob.NullWarcTsError), noTs)
+    assert(!noTs.contains("Null value appeared in non-nullable field"), noTs)
+    val noUrl = failure(base.head.copy(url = null))
+    assert(noUrl.contains(EncodeJob.NullUrlError), noUrl)
+    assert(!noUrl.contains("warc_ts"), noUrl)
+  }
+
+  test("delete and upsert drop exactly their own urls: non-BMP and byte-prefix neighbours survive") {
+    import spark.implicits._
+    val out = tmpDir("drop_exact")
+    // one partition: every stored row passes through the drop filter
+    val cfg = EncodeConfig(numPartitions = 1, chunkRows = 4)
+    val base = PagesGen.generate(spark, 24, partitions = 2).collect()
+    val paths = Seq("p", "pa", "\uD83D\uDE00", "\uD83D\uDE00x", "\uFFFD")
+    val extra = paths.zipWithIndex.map { case (p, i) =>
+      base(i).copy(url = s"https://edge.example/$p", text = s"stored $p")
+    }
+    val all = base ++ extra
+    EncodeJob.run(spark, spark.createDataset(all.toIndexedSeq), out, cfg)
+    def stored(): Map[String, String] = DecodeJob.run(spark, out).collect().map(p => p.url -> p.text).toMap
+    def url(p: String) = s"https://edge.example/$p"
+
+    // delete "/p" (a byte-prefix of "/pa") and U+1F600 (a prefix of U+1F600 "x"
+    // and, in UTF-16, ordered below U+FFFD although its UTF-8 bytes sort above)
+    EncodeJob.delete(spark, out, Seq(url("p"), url("\uD83D\uDE00")), cfg)
+    val afterDelete = stored()
+    assert(afterDelete.size == all.length - 2)
+    assert(!afterDelete.contains(url("p")) && !afterDelete.contains(url("\uD83D\uDE00")))
+    Seq("pa", "\uD83D\uDE00x", "\uFFFD").foreach(p => assert(afterDelete(url(p)) == s"stored $p", p))
+
+    // upsert "/pa" and U+1F600 "x": only those two rows change
+    val fresh = Seq("pa", "\uD83D\uDE00x").map(p => extra(paths.indexOf(p)).copy(text = s"fresh $p"))
+    EncodeJob.upsert(spark, spark.createDataset(fresh), out, cfg)
+    val afterUpsert = stored()
+    assert(afterUpsert.size == afterDelete.size)
+    assert(afterUpsert(url("pa")) == "fresh pa" && afterUpsert(url("\uD83D\uDE00x")) == "fresh \uD83D\uDE00x")
+    assert(afterUpsert - url("pa") - url("\uD83D\uDE00x") ==
+      afterDelete - url("pa") - url("\uD83D\uDE00x"))
+  }
 }
